@@ -395,6 +395,10 @@ def dense_global_index_pinned(
     block, so a caller can derive every per-group first-index / count
     / head aggregate driver-side instead of paying follow-up jobs —
     bulk_append's whole heads read-back job folds into this one."""
+    if collect_distinct is not None and group_counts is not None:
+        raise ValueError(
+            "collect_distinct and group_counts are mutually exclusive"
+        )
     if strategy == "window":
         w = Window.orderBy(*order_cols)
         out = df.withColumn(index_col, F.row_number().over(w) - F.lit(1))

@@ -10,11 +10,14 @@ Architecture (vs the reference's RDBMS backends):
     sets) is swapped atomically via write-temp + rename. Dense positions
     are assigned here, so the reference's gap detection/3s-stabilization
     (ReadonlyStreamStoreBase.cs:65-89) is unnecessary by construction.
-  - READ path: a Spark DataFrame over the manifest's file list with
-    deletion filters — every paged read is the declarative expression
-    from operators/read.py; Catalyst pushes position/version bounds into
-    the Parquet scan (row-group min/max pruning works because files are
-    position-ordered by construction).
+  - READ path: API pages (stream pages, `$all` pages, idempotency id
+    loads, lazy json fetch) are driver-local pyarrow scans pruned by an
+    in-memory per-file index — each manifest file's footer min/max of
+    `position` and `stream_id` plus its row count, read once per file
+    name — so a call opens only the files that can hold its answer (the
+    analog of the reference's PK(position) and (stream, version)
+    indexes). Analytics reads `log_df()`: a Spark DataFrame over the
+    manifest's file list with deletion filters.
   - DELETES are O(1) logical (deletion sets in the manifest, anti-joined
     on read) — the Delta-style deletion-vector approach; `compact()`
     rewrites files to apply them physically and to merge small commit
@@ -33,6 +36,7 @@ import json
 import os
 import uuid as _uuid
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,6 +152,50 @@ def resolve_manifest_state(path: str) -> tuple[dict, int]:
     return _replay_manifest(history_dir, base, current), snap_v
 
 
+class _FileEntry(NamedTuple):
+    """A commit file's footer summary: min/max of ``position`` and
+    ``stream_id`` over all row groups (None when any row group lacks
+    statistics for the column) and its row count."""
+
+    name: str
+    position_min: int | None
+    position_max: int | None
+    stream_min: str | None
+    stream_max: str | None
+    num_rows: int
+
+
+def _column_range(md, column: str) -> tuple:
+    idx = md.schema.names.index(column)
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(idx).statistics
+        if st is None or not st.has_min_max:
+            return None, None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi
+
+
+def _read_footer_entry(path: str, name: str) -> _FileEntry:
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    return _FileEntry(
+        name, *_column_range(md, "position"), *_column_range(md, "stream_id"),
+        md.num_rows,
+    )
+
+
+def _ranges_meet(fmin, fmax, lo, hi) -> bool:
+    """Can a file whose column spans [fmin, fmax] hold a value in
+    [lo, hi]? An unknown file range (no statistics) always can; a None
+    bound is open."""
+    if fmin is None:
+        return True
+    return (hi is None or fmin <= hi) and (lo is None or fmax >= lo)
+
+
 class SparkParquetStreamStore(StreamStore):
     def __init__(
         self,
@@ -178,6 +226,11 @@ class SparkParquetStreamStore(StreamStore):
         self._ids_cache: dict[str, list[str]] = {}
         self._log_cache: DataFrame | None = None
         self._log_cache_version = -1
+        # per-file footer index (see _file_index): entries by file name,
+        # and ((files list, its length), index list) for the manifest
+        # file list the index was built from
+        self._footers: dict[str, _FileEntry] = {}
+        self._index_state: tuple = ((None, -1), [])
 
     # ---------------------------------------------------------- time travel
 
@@ -455,27 +508,75 @@ class SparkParquetStreamStore(StreamStore):
         s = self._manifest["streams"].get(stream_id)
         return (s["version"], s["position"]) if s else None
 
-    def _stream_point_scan(self, flt, columns: list[str]):
-        """Driver-local pyarrow scan of the manifest-owned commit files
-        with deletion filters applied — the store's analog of the
-        reference's indexed point lookups (Tables.sql:42-46). Point
-        lookups (idempotency ids, lazy json fetch) are tiny keyed reads;
-        launching a Spark job for each would pay ~100 ms of scheduling
-        per append. Analytics stays on log_df()."""
+    def _file_index(self) -> list[_FileEntry]:
+        """One footer entry per manifest file, in manifest order — the
+        store's substitute for the reference's PK(position) and
+        (stream, version) B-trees on the JVM-free path. Data files are
+        immutable once named, so a footer is read once per file name,
+        when the name first shows up in the manifest (open, commit,
+        refresh, compaction); the list itself is rebuilt only when the
+        manifest's file list changes. That list only ever grows in
+        place (commits) or is replaced wholesale (open, refresh,
+        compaction), so its identity plus its length pin its content."""
+        files = self._manifest["files"]
+        key, index = self._index_state
+        if key[0] is files and key[1] == len(files):
+            return index
+        n = len(files)
+        names = files[:n]
+        footers = {
+            fn: self._footers.get(fn)
+            or _read_footer_entry(os.path.join(self._data_dir, fn), fn)
+            for fn in names
+        }
+        self._footers = footers  # drops names compaction retired
+        index = [footers[fn] for fn in names]
+        # one tuple assignment: concurrent readers see a key and its
+        # index together or not at all
+        self._index_state = ((files, n), index)
+        return index
+
+    def _stream_point_scan(self, stream_id: str, flt, columns: list[str]):
+        """Driver-local pyarrow scan of the commit files that can hold
+        ``stream_id``'s live rows, with deletion filters applied — the
+        store's analog of the reference's indexed point lookups
+        (Tables.sql:42-46). A file is opened only when its footer's
+        stream_id range contains the stream and its position range
+        meets the stream's live ``[first_position, position]`` window
+        from the manifest (raised above a delete's cutoff); a file
+        whose footer lacks statistics for a column is never pruned on
+        it. Point lookups (idempotency ids, lazy json fetch, stream
+        pages) are tiny keyed reads; launching a Spark job for each
+        would pay ~100 ms of scheduling per append. Analytics stays on
+        log_df()."""
         import pyarrow.dataset as ds
 
         from sqlstreamstore_spark.schema import arrow_messages_schema
 
         m = self._manifest
-        if not m["files"]:
+        s = m["streams"].get(stream_id)
+        lo, hi = None, None  # an unknown stream is not pruned by position
+        if s is not None:
+            lo, hi = s.get("first_position"), s["position"]
+        cutoff = m["deleted_streams"].get(stream_id)
+        if cutoff is not None and (lo is None or lo <= cutoff):
+            lo = cutoff + 1
+        files = [
+            os.path.join(self._data_dir, e.name)
+            for e in self._file_index()
+            if e.num_rows
+            and _ranges_meet(e.stream_min, e.stream_max, stream_id, stream_id)
+            and _ranges_meet(e.position_min, e.position_max, lo, hi)
+        ]
+        schema = arrow_messages_schema()
+        if not files:
             import pyarrow as pa
 
             return pa.table(
                 {c: [] for c in columns},
-                schema=pa.schema([arrow_messages_schema().field(c) for c in columns]),
+                schema=pa.schema([schema.field(c) for c in columns]),
             )
-        files = [os.path.join(self._data_dir, fn) for fn in m["files"]]
-        dataset = ds.dataset(files, format="parquet", schema=arrow_messages_schema())
+        dataset = ds.dataset(files, format="parquet", schema=schema)
         return dataset.to_table(filter=flt, columns=columns)
 
     def _stream_stored_ids(self, stream_id: str) -> list[str]:
@@ -487,7 +588,9 @@ class SparkParquetStreamStore(StreamStore):
             cutoff = m["deleted_streams"].get(stream_id)
             if cutoff is not None:
                 flt = flt & (ds.field("position") > cutoff)
-            tbl = self._stream_point_scan(flt, ["stream_version", "message_id"])
+            tbl = self._stream_point_scan(
+                stream_id, flt, ["stream_version", "message_id"]
+            )
             dead = set(m["deleted_messages"].get(stream_id, []))
             pairs = sorted(
                 (v, mid)
@@ -532,6 +635,7 @@ class SparkParquetStreamStore(StreamStore):
         if cutoff is not None:
             flt = flt & (ds.field("position") > cutoff)
         tbl = self._stream_point_scan(
+            stream_id,
             flt,
             ["position", "stream_id", "stream_version", "message_id",
              "created_utc", "type", "json_data", "json_metadata"],
@@ -547,72 +651,77 @@ class SparkParquetStreamStore(StreamStore):
         # should never cost a cluster job.
         return self._read_all_slice_arrow(from_position, count, forwards)
 
-    def _file_position_ranges(self) -> list[tuple[str, int, int]]:
-        """(file, min_position, max_position) from parquet footers —
-        the store's substitute for the reference's PK(position) B-tree
-        on the JVM-free path. Cached per manifest version; a footer read
-        is a few KB per file."""
-        import pyarrow.parquet as pq
-
-        if getattr(self, "_franges_version", None) == self._manifest["version"]:
-            return self._franges
-        out: list[tuple[str, int, int]] = []
-        for fn in self._manifest["files"]:
-            path = os.path.join(self._data_dir, fn)
-            md = pq.read_metadata(path)
-            idx = md.schema.names.index("position")
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            out.append((fn, min(mins), max(maxs)))
-        self._franges = out
-        self._franges_version = self._manifest["version"]
-        return out
-
     def _read_all_slice_arrow(self, from_position, count, forwards):
-        """maxCount-bounded global page without a JVM: prune files by
-        their footer position ranges, read candidates in range order,
-        stop as soon as no unread file can still contribute to the
-        first `count` surviving rows. Handles overlapping ranges (the
-        by_stream compaction layout) via the kth-position bound."""
+        """maxCount-bounded global page without a JVM: take candidate
+        files from the footer index (position range on the requested
+        side of ``from_position``), read them in range order in batches
+        whose footer row counts cover the rows still missing (one
+        dataset per batch), and stop as soon as no unread file can
+        still contribute to the first ``count`` surviving rows.
+        Overlapping ranges (the by_stream compaction layout) stay
+        correct via the kth-position bound; files without position
+        statistics are read first and never skipped."""
         import pyarrow.dataset as ds
 
+        from sqlstreamstore_spark.schema import arrow_messages_schema
+
         m = self._manifest
-        flt = (
-            (ds.field("position") >= from_position)
-            if forwards
-            else (ds.field("position") <= from_position)
-        )
+        lo, hi = (from_position, None) if forwards else (None, from_position)
         cands = [
-            (fn, mn, mx)
-            for fn, mn, mx in self._file_position_ranges()
-            if (mx >= from_position if forwards else mn <= from_position)
+            e for e in self._file_index()
+            if e.num_rows and _ranges_meet(e.position_min, e.position_max, lo, hi)
         ]
-        cands.sort(key=(lambda t: t[1]) if forwards else (lambda t: -t[2]))
+        if forwards:
+            flt = ds.field("position") >= from_position
+            cands.sort(key=lambda e: (e.position_min is not None, e.position_min or 0))
+        else:
+            flt = ds.field("position") <= from_position
+            cands.sort(key=lambda e: (e.position_max is not None, -(e.position_max or 0)))
+
+        def rows_bound(e) -> int:
+            # positions are unique, so the in-range span caps the rows
+            if e.position_min is None:
+                return e.num_rows
+            top = e.position_max if hi is None else min(e.position_max, hi)
+            bottom = e.position_min if lo is None else max(e.position_min, lo)
+            return min(e.num_rows, top - bottom + 1)
+
+        schema = arrow_messages_schema()
         dead_streams = m["deleted_streams"]
         dead_msgs = m["deleted_messages"]
+        dead_sets: dict[str, set[str]] = {}
         cols = ["position", "stream_id", "stream_version", "message_id",
                 "created_utc", "type", "json_data", "json_metadata"]
         rows: list[dict] = []
-        for i, (fn, mn, mx) in enumerate(cands):
-            dataset = ds.dataset(
-                [os.path.join(self._data_dir, fn)], format="parquet"
-            )
+        i = 0
+        while i < len(cands):
+            need = max(count - len(rows), 1)
+            batch, bound = [], 0
+            while i < len(cands) and bound < need:
+                batch.append(os.path.join(self._data_dir, cands[i].name))
+                bound += rows_bound(cands[i])
+                i += 1
+            dataset = ds.dataset(batch, format="parquet", schema=schema)
             for r in dataset.to_table(filter=flt, columns=cols).to_pylist():
-                cut = dead_streams.get(r["stream_id"])
+                sid = r["stream_id"]
+                cut = dead_streams.get(sid)
                 if cut is not None and r["position"] <= cut:
                     continue
-                if r["message_id"] in dead_msgs.get(r["stream_id"], []):
+                dead = dead_sets.get(sid)
+                if dead is None:
+                    dead = dead_sets[sid] = set(dead_msgs.get(sid, ()))
+                if r["message_id"] in dead:
                     continue
                 rows.append(r)
-            if len(rows) >= count and i + 1 < len(cands):
+            if len(rows) >= count and i < len(cands):
                 rows.sort(key=lambda r: r["position"], reverse=not forwards)
                 kth = rows[count - 1]["position"]
-                nxt = cands[i + 1]
+                nxt = cands[i]
                 # no later file can beat the current kth row
-                if (nxt[1] > kth) if forwards else (nxt[2] < kth):
+                if nxt.position_min is not None and (
+                    (nxt.position_min > kth) if forwards
+                    else (nxt.position_max < kth)
+                ):
                     break
         rows.sort(key=lambda r: r["position"], reverse=not forwards)
         return self._rows_to_messages(rows[:count])
@@ -807,7 +916,7 @@ class SparkParquetStreamStore(StreamStore):
         cutoff = m["deleted_streams"].get(stream_id)
         if cutoff is not None:
             flt = flt & (ds.field("position") > cutoff)
-        tbl = self._stream_point_scan(flt, ["json_data"])
+        tbl = self._stream_point_scan(stream_id, flt, ["json_data"])
         return tbl.column("json_data")[0].as_py() if tbl.num_rows else None
 
     # ------------------------------------------------------------ bulk load
@@ -1085,11 +1194,18 @@ class SparkParquetStreamStore(StreamStore):
         live.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols).write.parquet(
             tmp_dir
         )
+        # Unique tag, as for batch-/bulk- files: the renames below happen
+        # BEFORE the manifest CAS, so two handles compacting at the same
+        # version would otherwise replace each other's outputs and the
+        # CAS winner's manifest could point at the loser's bytes.
+        tag = _uuid.uuid4().hex[:8]
         new_files = []
         for i, fn in enumerate(sorted(os.listdir(tmp_dir))):
             if not fn.endswith(".parquet"):
                 continue
-            new_name = f"compacted-{self._manifest['version']:08d}-{i:05d}.parquet"
+            new_name = (
+                f"compacted-{self._manifest['version']:08d}-{tag}-{i:05d}.parquet"
+            )
             os.replace(os.path.join(tmp_dir, fn), os.path.join(self._data_dir, new_name))
             new_files.append(new_name)
         old_files = list(self._manifest["files"])

@@ -55,6 +55,18 @@ def test_group_counts_mode_matches_index_and_counts(spark):
     assert by_src_max == {s: first[s] + count[s] - 1 for s in first}
 
 
+@pytest.mark.parametrize("strategy", ["auto", "window"])
+def test_collect_distinct_and_group_counts_are_exclusive(spark, strategy):
+    from sqlstreamstore_spark.operators import positions as P
+
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "g string, k int")
+    with pytest.raises(ValueError, match="mutually exclusive"):
+        P.dense_global_index_pinned(
+            df, ["g", "k"], strategy=strategy,
+            collect_distinct="g", group_counts="g",
+        )
+
+
 # ------------------------------------------------- bulk_append job fold
 
 
