@@ -5,11 +5,14 @@ single-writer protocol (SURVEY.md §3.2's Spark design).
 Architecture (vs the reference's RDBMS backends):
   - WRITE path: driver-side commit protocol. The append decision (§2.3)
     runs in Python; the batch is written as one Parquet file (pyarrow —
-    a driver-local columnar write, no Spark job for a handful of rows);
-    the manifest (head position, per-stream heads, file list, deletion
-    sets) is swapped atomically via write-temp + rename. Dense positions
-    are assigned here, so the reference's gap detection/3s-stabilization
-    (ReadonlyStreamStoreBase.cs:65-89) is unnecessary by construction.
+    a driver-local columnar write, no Spark job for a handful of rows;
+    ``_commit_table`` is the one writer for transactional appends and
+    for Arrow-table ``bulk_append`` calls such as the streaming sink's
+    micro-batches); the manifest (head position, per-stream heads, file
+    list, deletion sets) is swapped atomically via write-temp + rename.
+    Dense positions are assigned here, so the reference's gap
+    detection/3s-stabilization (ReadonlyStreamStoreBase.cs:65-89) is
+    unnecessary by construction.
   - READ path: API pages (stream pages, `$all` pages, idempotency id
     loads, lazy json fetch) are driver-local pyarrow scans pruned by an
     in-memory per-file index — each manifest file's footer min/max of
@@ -32,6 +35,7 @@ one stream's ids on demand (the analog of the reference's indexed
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import os
 import uuid as _uuid
@@ -96,6 +100,8 @@ def _apply_manifest_patch(state: dict, p: dict) -> None:
         state["deleted_streams"] = p["deleted_streams"]
     if p.get("deleted_messages") is not None:
         state["deleted_messages"] = p["deleted_messages"]
+    if p.get("sink_epochs") is not None:
+        state["sink_epochs"] = p["sink_epochs"]
 
 
 def _replay_manifest(history_dir: str, base: dict, to_version: int) -> dict:
@@ -184,6 +190,21 @@ def _read_footer_entry(path: str, name: str) -> _FileEntry:
     return _FileEntry(
         name, *_column_range(md, "position"), *_column_range(md, "stream_id"),
         md.num_rows,
+    )
+
+
+@functools.cache
+def _commit_schema():
+    """The schema every driver-written commit file carries:
+    ``arrow_messages_schema()`` with the nullability of
+    ``MESSAGES_SCHEMA`` (only json_metadata may be null)."""
+    import pyarrow as pa
+
+    from sqlstreamstore_spark.schema import arrow_messages_schema
+
+    nullable = {f.name: f.nullable for f in MESSAGES_SCHEMA.fields}
+    return pa.schema(
+        [f.with_nullable(nullable[f.name]) for f in arrow_messages_schema()]
     )
 
 
@@ -735,80 +756,144 @@ class SparkParquetStreamStore(StreamStore):
 
     def _commit_messages(self, stream_id, base_version, base_position, messages, created_utc):
         self._assert_writable()
+        if not messages:
+            # an empty append creates the stream: a head-only commit
+            s = self._manifest["streams"].setdefault(
+                stream_id,
+                {"version": -1, "position": -1, "first_position": None, "count": 0},
+            )
+            self._save_manifest(patch={"streams": {stream_id: dict(s)}})
+            return base_version, base_position
         import pyarrow as pa
+
+        n = len(messages)
+        string = pa.string()
+        self._commit_table(pa.table(
+            {
+                "stream_id": pa.array([stream_id] * n, string),
+                "message_id": pa.array([nm.message_id for nm in messages], string),
+                "type": pa.array([nm.type for nm in messages], string),
+                "json_data": pa.array([nm.json_data for nm in messages], string),
+                "json_metadata": pa.array([nm.json_metadata for nm in messages], string),
+                "created_utc": pa.array([created_utc] * n, pa.timestamp("us")),
+            }
+        ))
+        if stream_id in self._ids_cache:
+            self._ids_cache[stream_id].extend(nm.message_id for nm in messages)
+        s = self._manifest["streams"][stream_id]
+        return s["version"], s["position"]
+
+    def _commit_table(self, tbl, order_col: str | None = None) -> tuple[int, int]:
+        """The driver-side commit writer: one pyarrow Parquet file and one
+        manifest patch for a (multi-stream) Arrow table of messages.
+
+        ``tbl`` carries stream_id, message_id, type, json_data,
+        json_metadata and created_utc (naive UTC, or tz-aware), plus
+        ``order_col`` when given. Rows are stable-sorted by
+        (stream_id, order_col) with nulls first — Spark's ascending
+        order, so this path lays out positions as bulk_append's Spark
+        path does; without ``order_col`` the rows must be one stream's
+        messages in append order and are kept as given. They then take
+        positions head+1.. and continue each stream's version from its
+        manifest head. Runs under the caller's ``_write_lock``; an empty
+        table commits nothing. Returns (n_rows, new_head)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        version, position = base_version, base_position
-        if messages:
-            rows = []
-            for nm in messages:
-                version += 1
-                position += 1
-                rows.append(
-                    {
-                        "position": position,
-                        "stream_id": stream_id,
-                        "stream_version": version,
-                        "message_id": nm.message_id,
-                        "created_utc": created_utc,
-                        "type": nm.type,
-                        "json_data": nm.json_data,
-                        "json_metadata": nm.json_metadata,
-                    }
-                )
-            table = pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [
-                        pa.field("position", pa.int64(), False),
-                        pa.field("stream_id", pa.string(), False),
-                        pa.field("stream_version", pa.int32(), False),
-                        pa.field("message_id", pa.string(), False),
-                        pa.field("created_utc", pa.timestamp("us"), False),
-                        pa.field("type", pa.string(), False),
-                        pa.field("json_data", pa.string(), False),
-                        pa.field("json_metadata", pa.string(), True),
-                    ]
-                ),
+        n = tbl.num_rows
+        base = self._manifest["head_position"]
+        if n == 0:
+            return 0, base
+        if order_col is not None:
+            keys = [("stream_id", "ascending"), (order_col, "ascending")]
+            tbl = tbl.take(
+                pc.sort_indices(tbl, sort_keys=keys, null_placement="at_start")
             )
-            # Unique suffix: the data write happens BEFORE the flock+CAS
-            # manifest swap, so a stale handle racing a committed writer
-            # would otherwise clobber the winner's file (both compute the
-            # same version+position from the same loaded manifest) — the
-            # CAS would reject the loser's manifest but the winner's
-            # bytes would already be gone. The loser's uniquely-named
-            # orphan is invisible to manifest-scoped readers and swept by
-            # compact().
-            fname = (
-                f"batch-{self._manifest['version'] + 1:08d}-{position:012d}"
-                f"-{_uuid.uuid4().hex[:8]}.parquet"
-            )
-            pq.write_table(table, os.path.join(self._data_dir, fname))
-            self._manifest["files"].append(fname)
-            self._manifest["head_position"] = position
-
-        s = self._manifest["streams"].setdefault(
-            stream_id,
-            {"version": -1, "position": -1, "first_position": None, "count": 0},
+        # rows of one stream are now one contiguous block: its first row
+        # index and length give its positions and versions
+        streams = self._manifest["streams"]
+        blocks: dict[str, list[int]] = {}
+        versions = []
+        for i, sid in enumerate(tbl.column("stream_id").to_pylist()):
+            block = blocks.get(sid)
+            if block is None:
+                block = blocks[sid] = [i, 0]
+                s = streams.get(sid)
+                v = s["version"] if s else -1
+            block[1] += 1
+            v += 1
+            versions.append(v)
+        cols = {
+            "position": pa.array(range(base + 1, base + n + 1), pa.int64()),
+            "stream_version": pa.array(versions, pa.int32()),
+        }
+        schema = _commit_schema()
+        arrays = []
+        for f in schema:
+            col = cols[f.name] if f.name in cols else tbl.column(f.name)
+            if col.null_count and not f.nullable:
+                raise ValueError(f"{f.name} must not be null")
+            # a tz-aware created_utc casts to naive UTC
+            arrays.append(col if col.type == f.type else col.cast(f.type))
+        table = pa.Table.from_arrays(arrays, schema=schema)
+        # Unique suffix: the data write happens BEFORE the flock+CAS
+        # manifest swap, so a stale handle racing a committed writer
+        # would otherwise clobber the winner's file (both compute the
+        # same version+position from the same loaded manifest) — the
+        # CAS would reject the loser's manifest but the winner's
+        # bytes would already be gone. The loser's uniquely-named
+        # orphan is invisible to manifest-scoped readers and swept by
+        # compact().
+        fname = (
+            f"batch-{self._manifest['version'] + 1:08d}-{base + n:012d}"
+            f"-{_uuid.uuid4().hex[:8]}.parquet"
         )
-        if messages:
-            s["version"] = version
-            s["position"] = position
-            if s["first_position"] is None:
-                s["first_position"] = base_position + 1
-            s["count"] += len(messages)
-            if stream_id in self._ids_cache:
-                self._ids_cache[stream_id].extend(nm.message_id for nm in messages)
-        # O(change) delta-log commit: only this stream's head, the one
-        # new file, and the global head travel to disk
-        commit_patch: dict = {"streams": {stream_id: dict(s)}}
-        if messages:
-            commit_patch["head_position"] = position
-            commit_patch["files_add"] = [fname]
-        self._save_manifest(patch=commit_patch)
-        if messages and self.on_appended:
+        pq.write_table(table, os.path.join(self._data_dir, fname))
+        return self._commit_blocks(blocks, [fname])
+
+    def _commit_blocks(self, blocks: dict, files: list[str]) -> tuple[int, int]:
+        """Advance the heads for a batch already written to ``files`` and
+        commit it as ONE delta-log patch. ``blocks`` maps each stream to
+        (first row index, row count) of its contiguous block in the
+        batch, whose rows hold positions head+1.. in index order. Only
+        the touched stream heads, the new files, the global head and the
+        sink epoch markers travel to disk: the markers ride in the same
+        patch as the data, so a reopened handle sees exactly the epochs
+        whose rows it holds. Returns (n_rows, new_head)."""
+        base = self._manifest["head_position"]
+        streams = self._manifest["streams"]
+        touched = {}
+        n_rows = 0
+        new_head = base
+        for sid, (first, count) in blocks.items():
+            old = streams.get(sid)
+            p_max = base + first + count
+            streams[sid] = touched[sid] = {
+                "version": (old["version"] if old else -1) + count,
+                "position": p_max,
+                "first_position": (
+                    old["first_position"]
+                    if old and old["first_position"] is not None
+                    else base + first + 1
+                ),
+                "count": (old["count"] if old else 0) + count,
+            }
+            n_rows += count
+            new_head = max(new_head, p_max)
+        self._manifest["files"].extend(files)
+        self._manifest["head_position"] = new_head
+        patch = {
+            "streams": {sid: dict(s) for sid, s in touched.items()},
+            "files_add": files,
+            "head_position": new_head,
+        }
+        if "sink_epochs" in self._manifest:
+            patch["sink_epochs"] = dict(self._manifest["sink_epochs"])
+        self._save_manifest(patch=patch)
+        if self.on_appended:
             self.on_appended()
-        return version, position
+        return n_rows, new_head
 
     def _delete_stream_rows(self, stream_id) -> bool:
         self._assert_writable()
@@ -924,31 +1009,51 @@ class SparkParquetStreamStore(StreamStore):
     def bulk_append(
         self, new_messages, order_col: str, allow_existing: bool = False
     ) -> tuple[int, int]:
-        """Scale ingestion path: append a whole DataFrame of messages in
-        ONE commit, entirely through Spark — message bytes never touch
-        the driver (only per-stream head aggregates do, O(#streams)).
+        """Scale ingestion path: append a whole batch of messages in ONE
+        commit. ``new_messages`` is either
 
-        new_messages columns: stream_id, message_id, type, json_data,
-        json_metadata, created_utc(timestamp), plus `order_col` defining
-        intra-stream order. By default target streams must be NEW (the
-        per-message §2.3 idempotency matrix is the transactional API's
-        job; bulk load is for migration/backfill — mirrored by the
-        reference's absence of any bulk path, its LoadTests just loop
-        appends). ``allow_existing=True`` continues versions from each
-        stream's current head via a broadcast of the affected heads —
-        the streaming-ingestion contract (streaming/sink.py), which
-        does NOT run idempotency checks (ANY-with-fresh-ids semantics).
+          - a Spark DataFrame, written entirely through Spark — message
+            bytes never touch the driver (only per-stream head
+            aggregates do, O(#streams)); or
+          - a ``pyarrow.Table`` already on the driver (the streaming
+            sink's small micro-batches), written by the driver-side
+            commit writer as one Parquet file — no Spark job at all.
 
-        Positions are assigned head+1.. by (stream_id, order_col) using
-        the two-phase dense index (no single-partition funnel); stream
-        versions by a per-stream window. Returns (n_rows, new_head).
+        Columns: stream_id, message_id, type, json_data, json_metadata,
+        created_utc(timestamp), plus `order_col` defining intra-stream
+        order. By default target streams must be NEW (the per-message
+        §2.3 idempotency matrix is the transactional API's job; bulk
+        load is for migration/backfill — mirrored by the reference's
+        absence of any bulk path, its LoadTests just loop appends).
+        ``allow_existing=True`` continues versions from each stream's
+        current head — the streaming-ingestion contract
+        (streaming/sink.py), which does NOT run idempotency checks
+        (ANY-with-fresh-ids semantics).
+
+        Both inputs give the same store: positions head+1.. in
+        (stream_id, order_col) order (nulls first), versions continuing
+        each stream's head. A DataFrame goes through the two-phase dense
+        index (no single-partition funnel); a table is stable-sorted on
+        the driver. Returns (n_rows, new_head); an empty table commits
+        nothing.
         """
+        import pyarrow as pa
+
         self._assert_writable()
         # same serialized-writer guarantee as the transactional API —
         # the streaming sink invokes this from the micro-batch thread
         # while the owning application may append on its own thread.
         with self._write_lock:
-            return self._bulk_append_locked(new_messages, order_col, allow_existing)
+            if not isinstance(new_messages, pa.Table):
+                return self._bulk_append_locked(new_messages, order_col, allow_existing)
+            sids = new_messages.column("stream_id").unique().to_pylist()
+            existing = sorted(s for s in sids if s in self._manifest["streams"])
+            if existing and not allow_existing:
+                raise ValueError(f"bulk_append targets existing streams: {existing[:5]}")
+            result = self._commit_table(new_messages, order_col)
+            for sid in sids:
+                self._ids_cache.pop(sid, None)
+            return result
 
     def _bulk_append_locked(
         self, new_messages, order_col: str, allow_existing: bool
@@ -1044,40 +1149,13 @@ class SparkParquetStreamStore(StreamStore):
             if fn.endswith(".parquet")
         ]
         # r13: heads are ARITHMETIC over the already-collected per-stream
-        # (first_idx, count) plan — position block [first+base+1,
-        # first+count+base], version block ends at count−1+base_version+1
-        # — so the read-back job over the just-written parquet is gone.
-        n_rows = 0
-        new_head = base
-        for sid, c in stream_count.items():
-            fi = stream_first[sid]
-            bv = base_versions.get(sid)
-            v = (bv + 1 if bv is not None else 0) + c - 1
-            p_min = fi + base + 1
-            p_max = fi + c + base
-            old = self._manifest["streams"].get(sid)
-            self._manifest["streams"][sid] = {
-                "version": int(v),
-                "position": int(p_max),
-                "first_position": old["first_position"] if old else int(p_min),
-                "count": (old["count"] if old else 0) + int(c),
-            }
+        # (first_idx, count) plan — so the read-back job over the
+        # just-written parquet is gone.
+        for sid in stream_count:
             self._ids_cache.pop(sid, None)
-            n_rows += int(c)
-            new_head = max(new_head, int(p_max))
-        self._manifest["files"].extend(files)
-        self._manifest["head_position"] = new_head
-        self._save_manifest(patch={
-            "streams": {
-                sid: dict(self._manifest["streams"][sid])
-                for sid in stream_count
-            },
-            "files_add": files,
-            "head_position": new_head,
-        })
-        if self.on_appended:
-            self.on_appended()
-        return n_rows, new_head
+        return self._commit_blocks(
+            {sid: (stream_first[sid], c) for sid, c in stream_count.items()}, files
+        )
 
     # ---------------------------------------------------------- maintenance
 
@@ -1188,39 +1266,46 @@ class SparkParquetStreamStore(StreamStore):
         sort_cols = (
             ["position"] if layout == "by_position" else ["stream_id", "stream_version"]
         )
+        import shutil
+
         live = self.log_df()
         tmp_dir = os.path.join(self.path, f"compact-{_uuid.uuid4().hex}")
         n = target_files or max(1, self.spark.sparkContext.defaultParallelism)
-        live.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols).write.parquet(
-            tmp_dir
-        )
-        # Unique tag, as for batch-/bulk- files: the renames below happen
-        # BEFORE the manifest CAS, so two handles compacting at the same
-        # version would otherwise replace each other's outputs and the
-        # CAS winner's manifest could point at the loser's bytes.
-        tag = _uuid.uuid4().hex[:8]
-        new_files = []
-        for i, fn in enumerate(sorted(os.listdir(tmp_dir))):
-            if not fn.endswith(".parquet"):
-                continue
-            new_name = (
-                f"compacted-{self._manifest['version']:08d}-{tag}-{i:05d}.parquet"
-            )
-            os.replace(os.path.join(tmp_dir, fn), os.path.join(self._data_dir, new_name))
-            new_files.append(new_name)
-        old_files = list(self._manifest["files"])
-        self._manifest["files"] = new_files
-        self._manifest["deleted_streams"] = {}
-        self._manifest["deleted_messages"] = {}
-        self._save_manifest()
+        try:
+            live.repartitionByRange(n, *sort_cols).sortWithinPartitions(
+                *sort_cols
+            ).write.parquet(tmp_dir)
+            # Unique tag, as for batch-/bulk- files: the renames below
+            # happen BEFORE the manifest CAS, so two handles compacting at
+            # the same version would otherwise replace each other's
+            # outputs and the CAS winner's manifest could point at the
+            # loser's bytes.
+            tag = _uuid.uuid4().hex[:8]
+            new_files = []
+            for i, fn in enumerate(sorted(os.listdir(tmp_dir))):
+                if not fn.endswith(".parquet"):
+                    continue
+                new_name = (
+                    f"compacted-{self._manifest['version']:08d}-{tag}-{i:05d}.parquet"
+                )
+                os.replace(
+                    os.path.join(tmp_dir, fn), os.path.join(self._data_dir, new_name)
+                )
+                new_files.append(new_name)
+            old_files = list(self._manifest["files"])
+            self._manifest["files"] = new_files
+            self._manifest["deleted_streams"] = {}
+            self._manifest["deleted_messages"] = {}
+            self._save_manifest()
+        finally:
+            # the temp dir holds only Spark's _SUCCESS/.crc leftovers once
+            # the renames ran; a write or CAS failure must not leak it
+            shutil.rmtree(tmp_dir, ignore_errors=True)
         for fn in old_files:
             try:
                 os.remove(os.path.join(self._data_dir, fn))
             except OSError:
                 pass
-        import shutil
-
-        shutil.rmtree(tmp_dir, ignore_errors=True)
         # Sweep orphans the manifest never owned (e.g. a failed
         # bulk_append job's partial output): readers are manifest-scoped
         # so orphans are invisible, but they waste space until compacted.

@@ -314,3 +314,5 @@ def test_concurrent_compactions_at_one_version_keep_the_winners_files(spark, tmp
     assert rows_of(winner) == expected
     assert rows_of(SparkParquetStreamStore(spark, path)) == expected
     assert_pruned_reads_match_brute_force(SparkParquetStreamStore(None, path), rng)
+    # neither the winner nor the CAS loser leaves its temp directory
+    assert [d for d in os.listdir(path) if d.startswith("compact-")] == []
