@@ -14,16 +14,22 @@ epoch's rows, and skips replays — the same
 checkpoint-plus-transactional-sink pattern every exactly-once Spark
 sink uses, with the store's own manifest as the transaction log.
 
-Scale: a micro-batch of at most ``ARROW_COMMIT_MAX_ROWS`` rows is
-collected to the driver in one Spark job (``limit(max + 1).toArrow()``
-over the message columns) and committed by the store's driver-side
-Arrow writer: one Parquet file, no further job. A bulk commit through
-Spark costs 8 jobs (range layout, counts, plan broadcast, write) whatever
-the batch size — ~0.9 s at local[2] on a 4-vCPU host, which dominates a
+Scale: each micro-batch first runs one small Spark job that collects,
+for at most ``ARROW_COMMIT_MAX_ROWS + 1`` of its rows, the UTF-8 byte
+length of the string message columns (one long a row). A batch within both
+``ARROW_COMMIT_MAX_ROWS`` and the byte budget (``ARROW_COMMIT_MAX_BYTES``,
+lowered to a quarter of ``spark.driver.maxResultSize`` when that is
+smaller) is collected to the driver in a second job (``toArrow()`` over
+the message columns) and committed by the store's driver-side Arrow
+writer: one Parquet file, no further job. A bulk commit through Spark
+costs 8 jobs (range layout, counts, plan broadcast, write) whatever the
+batch size — ~0.9 s at local[2] on a 4-vCPU host, which dominates a
 batch of a few thousand rows.
-A larger batch keeps the Spark path (``bulk_append(batch_df)``), so at
-scale message bytes never touch the driver; the driver then handles
-only per-stream head aggregates and the manifest swap.
+A larger batch — by rows or by bytes — keeps the Spark path
+(``bulk_append(batch_df)``), so its message bytes never touch the
+driver; the driver then handles only per-stream head aggregates and the
+manifest swap. The limits bound driver memory; they were not measured as
+the point where the two paths cost the same.
 """
 
 from __future__ import annotations
@@ -32,16 +38,30 @@ from pyspark.sql import DataFrame
 
 from sqlstreamstore_spark.store.spark_store import SparkParquetStreamStore
 
-#: Largest micro-batch (rows) committed through the driver-side Arrow
-#: writer. 100k rows of ~200-byte messages is ~30 MB of Arrow on the
-#: driver — small beside any driver heap — while the Spark path's fixed
-#: job overhead is what a batch of that size would otherwise pay; above
-#: it the batch stays distributed.
+#: Largest micro-batch committed through the driver-side Arrow writer,
+#: in rows and in UTF-8 bytes of its string message columns. Both bound
+#: what one micro-batch puts in driver memory (the collected table, its
+#: sorted copy and the written file), not a measured crossover with the
+#: Spark path: the benchmark's sink batches (3,000 rows of ~200 B) sit
+#: far below both, and no batch above them has been timed. The byte cap
+#: keeps a batch of large messages off the driver however few its rows;
+#: the row cap bounds the per-row columns the byte sum leaves out.
 ARROW_COMMIT_MAX_ROWS = 100_000
+ARROW_COMMIT_MAX_BYTES = 64 << 20
 
 _MESSAGE_COLUMNS = (
     "stream_id", "message_id", "type", "json_data", "json_metadata", "created_utc",
 )
+_STRING_COLUMNS = _MESSAGE_COLUMNS[:-1]
+
+
+def _byte_budget(max_result_bytes: int) -> int:
+    """The Arrow path's byte budget under a ``spark.driver.maxResultSize``
+    of ``max_result_bytes`` (0 = unlimited): a collect over that size
+    fails the job, and a replay would fail the same way for good."""
+    if max_result_bytes <= 0:
+        return ARROW_COMMIT_MAX_BYTES
+    return min(ARROW_COMMIT_MAX_BYTES, max_result_bytes // 4)
 
 
 def _commit_epoch(
@@ -52,17 +72,35 @@ def _commit_epoch(
     epoch_id: int,
 ) -> bool:
     """Append one micro-batch and stamp its epoch marker in ONE commit.
-    One Spark job collects at most ``ARROW_COMMIT_MAX_ROWS + 1`` rows of
-    the message columns; a batch within the limit commits as that Arrow
-    table, a larger one through ``bulk_append(batch_df)``. Returns False
-    for an empty batch (nothing committed, no marker)."""
-    cols = list(_MESSAGE_COLUMNS)
-    if order_col not in cols:
-        cols.append(order_col)
-    tbl = batch_df.select(*cols).limit(ARROW_COMMIT_MAX_ROWS + 1).toArrow()
-    if tbl.num_rows == 0:
+    One Spark job collects the string-column byte length of at most
+    ``ARROW_COMMIT_MAX_ROWS + 1`` rows (8 bytes a row on the driver); a
+    batch within both limits is collected in a second job and commits
+    as that Arrow table, a larger one through ``bulk_append(batch_df)``.
+    Returns False for an empty batch (nothing committed, no marker)."""
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+
+    row_bytes = sum(F.coalesce(F.octet_length(c), F.lit(0)) for c in _STRING_COLUMNS)
+    sizes = (
+        batch_df.select(row_bytes.cast("long").alias("b"))
+        .limit(ARROW_COMMIT_MAX_ROWS + 1)
+        .toArrow()
+        .column("b")
+    )
+    if len(sizes) == 0:
         return False
-    batch = tbl if tbl.num_rows <= ARROW_COMMIT_MAX_ROWS else batch_df
+    sc = batch_df.sparkSession.sparkContext
+    max_result = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        sc.getConf().get("spark.driver.maxResultSize", "1g")
+    )
+    if (len(sizes) <= ARROW_COMMIT_MAX_ROWS
+            and pc.sum(sizes).as_py() <= _byte_budget(max_result)):
+        cols = list(_MESSAGE_COLUMNS)
+        if order_col not in cols:
+            cols.append(order_col)
+        batch = batch_df.select(*cols).toArrow()
+    else:
+        batch = batch_df
     # The write lock spans stamp + commit, so no other writer's commit
     # can persist the marker before this epoch's rows. The marker rides
     # in the commit's manifest patch: data + marker land atomically. If
@@ -106,14 +144,16 @@ def store_sink(
     columns (stream_id, message_id, type, json_data, json_metadata,
     created_utc) plus ``order_col`` for intra-stream ordering.
 
-    Each micro-batch runs one Spark job in the handler: it collects at
-    most ``ARROW_COMMIT_MAX_ROWS`` + 1 rows of those columns as Arrow.
-    A batch within the limit commits through the store's driver-side
+    Each micro-batch first runs one small job in the handler: it
+    collects the string-column byte length of at most
+    ``ARROW_COMMIT_MAX_ROWS`` + 1 rows. A batch within
+    ``ARROW_COMMIT_MAX_ROWS`` rows and the byte budget is collected as
+    Arrow in a second job and commits through the store's driver-side
     Arrow writer (no further job); a larger one through the Spark
     ``bulk_append`` path, so a big batch's bytes stay on the executors.
-    The limit is a row count because that is what the driver holds in
-    memory, and what decides whether the Spark path's fixed 8 jobs or
-    the driver copy costs more.
+    Both limits bound driver memory: a row cap alone would let a batch
+    of large messages past ``spark.driver.maxResultSize``, fail the
+    collect, and fail every replay of the epoch the same way.
 
     Returns the StreamingQuery. Epoch replays are skipped via the
     manifest's sink_epochs record (exactly-once per epoch), persisted in

@@ -1,9 +1,9 @@
 """The driver-side Arrow commit writer (``SparkParquetStreamStore._commit_table``)
 and the streaming sink's use of it: a ``pyarrow.Table`` bulk_append gives
 the same store as the Spark DataFrame path, a within-limit sink micro-batch
-costs one Spark job (and the store call none), an over-limit batch falls
-back to the Spark path, and the sink's exactly-once epoch marker survives
-a reopen."""
+costs two Spark jobs (and the store call none), a batch over the row or
+byte limit falls back to the Spark path, and the sink's exactly-once epoch
+marker survives a reopen."""
 
 from __future__ import annotations
 
@@ -155,12 +155,16 @@ def test_arrow_and_spark_bulk_append_give_identical_stores(spark, tmp_path):
                                    m.created_utc) for m in want], sid
 
 
-def _write_inputs(src: str, sizes: list[int], seed: int) -> None:
+def _write_inputs(src: str, sizes: list[int], seed: int, big: tuple = ()) -> None:
+    """One input file per size; files whose index is in ``big`` carry
+    5,000-byte json_data."""
     rng = random.Random(seed)
     os.makedirs(src)
     lo = 0
     for i, n in enumerate(sizes):
         rows = _rows(rng, list(range(lo, lo + n)), [f"d{k}" for k in range(5)])
+        if i in big:
+            rows = [r[:3] + ('{"p":"%s"}' % ("x" * 4992),) + r[4:] for r in rows]
         pq.write_table(_table(rows), os.path.join(src, f"part-{i:04d}.parquet"))
         lo += n
 
@@ -172,7 +176,7 @@ def _run_sink(spark, store, src: str, query_name: str) -> None:
     assert q.exception() is None
 
 
-def test_sink_micro_batch_costs_one_job_and_arrow_bulk_append_none(spark, tmp_path):
+def test_sink_micro_batch_costs_two_jobs_and_arrow_bulk_append_none(spark, tmp_path):
     src = str(tmp_path / "in")
     _write_inputs(src, [40], seed=3)
     batch = spark.read.schema(SCHEMA).parquet(src)
@@ -187,9 +191,22 @@ def test_sink_micro_batch_costs_one_job_and_arrow_bulk_append_none(spark, tmp_pa
     tbl = pq.read_table(os.path.join(src, "part-0000.parquet"))
     with count_jobs(sc, jobs):
         store.bulk_append(tbl, "seq", allow_existing=True)
-    assert jobs == [1, 0, 0]
+    assert jobs == [2, 0, 0]  # sizes + toArrow; replay; Arrow commit
     assert store.read_head_position() == 79
     assert store._manifest["sink_epochs"] == {"q": 0}
+
+
+def _spy_inputs(store) -> list[str]:
+    """Record which path each bulk_append call of ``store`` takes."""
+    inputs: list[str] = []
+    real = store.bulk_append
+
+    def spy(new_messages, *a, **k):
+        inputs.append("arrow" if isinstance(new_messages, pa.Table) else "spark")
+        return real(new_messages, *a, **k)
+
+    store.bulk_append = spy
+    return inputs
 
 
 def test_over_limit_batch_takes_the_spark_path(spark, tmp_path, monkeypatch):
@@ -200,18 +217,37 @@ def test_over_limit_batch_takes_the_spark_path(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(sink_mod, "ARROW_COMMIT_MAX_ROWS", 5)
     store = SparkParquetStreamStore(spark, str(tmp_path / "mixed"))
-    inputs: list[str] = []
-    real = store.bulk_append
-
-    def spy(new_messages, *a, **k):
-        inputs.append("arrow" if isinstance(new_messages, pa.Table) else "spark")
-        return real(new_messages, *a, **k)
-
-    store.bulk_append = spy
+    inputs = _spy_inputs(store)
     _run_sink(spark, store, src, "q")
     assert inputs == ["arrow", "spark", "arrow", "spark"]
     assert_same_store(store, reference)
     assert store._manifest["sink_epochs"] == reference._manifest["sink_epochs"] == {"q": 3}
+
+
+def test_large_messages_take_the_spark_path(spark, tmp_path, monkeypatch):
+    """A batch of few rows but large messages stays off the driver."""
+    src = str(tmp_path / "in")
+    _write_inputs(src, [6, 3, 6], seed=9, big=(1,))
+    reference = SparkParquetStreamStore(spark, str(tmp_path / "arrow"))
+    reference_inputs = _spy_inputs(reference)
+    _run_sink(spark, reference, src, "q")
+    assert reference_inputs == ["arrow"] * 3
+
+    # 3 rows of 5,000-byte json_data exceed 10,000 bytes; 6 small rows don't
+    monkeypatch.setattr(sink_mod, "ARROW_COMMIT_MAX_BYTES", 10_000)
+    store = SparkParquetStreamStore(spark, str(tmp_path / "mixed"))
+    inputs = _spy_inputs(store)
+    _run_sink(spark, store, src, "q")
+    assert inputs == ["arrow", "spark", "arrow"]
+    assert_same_store(store, reference)
+    assert store._manifest["sink_epochs"] == {"q": 2}
+
+
+def test_byte_budget_stays_under_max_result_size(monkeypatch):
+    monkeypatch.setattr(sink_mod, "ARROW_COMMIT_MAX_BYTES", 64 << 20)
+    assert sink_mod._byte_budget(0) == 64 << 20  # maxResultSize unlimited
+    assert sink_mod._byte_budget(1 << 30) == 64 << 20  # Spark's 1g default
+    assert sink_mod._byte_budget(32 << 20) == 8 << 20
 
 
 @pytest.mark.parametrize("sink_name", ["store_sink", "deduped_store_sink"])
