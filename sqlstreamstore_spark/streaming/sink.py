@@ -78,11 +78,12 @@ def _commit_epoch(
     as that Arrow table, a larger one through ``bulk_append(batch_df)``.
     Returns False for an empty batch (nothing committed, no marker)."""
     import pyarrow.compute as pc
-    from pyspark.sql import functions as F
 
-    row_bytes = sum(F.coalesce(F.octet_length(c), F.lit(0)) for c in _STRING_COLUMNS)
+    # a SQL string, not pyspark.sql.functions Columns: in PySpark 4.1
+    # the first Column a driver process builds adds ~25 MB to its RSS
+    row_bytes = " + ".join(f"coalesce(octet_length(`{c}`), 0)" for c in _STRING_COLUMNS)
     sizes = (
-        batch_df.select(row_bytes.cast("long").alias("b"))
+        batch_df.selectExpr(f"CAST({row_bytes} AS BIGINT) AS b")
         .limit(ARROW_COMMIT_MAX_ROWS + 1)
         .toArrow()
         .column("b")
